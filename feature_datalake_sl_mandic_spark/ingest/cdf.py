@@ -165,7 +165,6 @@ def ingest_incremental_cdf(
         from feature_datalake_sl_mandic_spark.ingest.history import append_run
 
         append_run(
-            spark,
             lake_dir,
             table_name=table_name or target.path.rsplit("/", 1)[-1],
             database=database,

@@ -10,6 +10,21 @@ Here the history is a date-partitioned parquet table; ``latest_runs`` is the
 same aggregation as a DataFrame plan, so the partition filter prunes files
 (partition column = execution_date) instead of relying on a warehouse.
 
+``append_run`` writes its one row from the driver, not as a Spark job: one
+pyarrow parquet file per row, written under a dot-prefixed temp name inside
+``execution_date=<date>/`` and ``os.replace``d to ``part-<uuid>.parquet``.
+Spark and pyarrow readers skip dot-prefixed files, so a reader sees a whole
+row file or none — the same single-atomic-object commit as the manifest
+(``manifest.py``) and the transaction log (``sources/txlog.py``). A Spark
+append (``DataFrameWriter.parquet``) would cost a multi-task job per row and
+commit through the shared ``<history>/_temporary``, which concurrent appends
+from ``run_pipeline``'s threads delete under each other: the losing commit
+fails, its table is retried, and a row that had landed is duplicated. The
+driver-side write shares no staging directory, so there is no such race.
+Files keep Spark's layout: the partition column lives only in the directory
+name, and ``execution_time`` is stored UTC-adjusted so Spark reads it back
+as ``TimestampType``.
+
 Anti-pattern fixed (SURVEY.md §4): the reference re-scans the whole source
 with ``df.count()`` *after* writing (``spark_ingest_slmandicprd.py:108``).
 ``observed_count`` attaches ``df.observe()`` so the row count is collected as
@@ -21,8 +36,11 @@ from __future__ import annotations
 import datetime as dt
 import os
 import time
+import uuid
 
-from pyspark.sql import DataFrame, Observation, Row, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -35,6 +53,16 @@ HISTORY_SCHEMA = T.StructType(
         T.StructField("row_count", T.IntegerType(), True),
         T.StructField("execution_date", T.DateType(), True),
         T.StructField("execution_time", T.TimestampType(), True),
+    ]
+)
+# One row file as append_run writes it: HISTORY_SCHEMA minus the partition
+# column, timestamps UTC-adjusted (read back as TimestampType, not NTZ).
+_FILE_SCHEMA = pa.schema(
+    [
+        ("table_name", pa.string()),
+        ("name_dataBase", pa.string()),
+        ("row_count", pa.int32()),
+        ("execution_time", pa.timestamp("us", tz="UTC")),
     ]
 )
 
@@ -51,7 +79,6 @@ def history_path(lake_dir: str) -> str:
 
 
 def append_run(
-    spark: SparkSession,
     lake_dir: str,
     table_name: str,
     database: str,
@@ -59,23 +86,37 @@ def append_run(
     execution_time: dt.datetime | None = None,
 ) -> None:
     """Append one audit row (S8/S11 parity), partitioned by execution_date so
-    the freshness lookup partition-prunes."""
+    the freshness lookup partition-prunes. A naive ``execution_time`` is UTC."""
     execution_time = execution_time or dt.datetime.now(dt.timezone.utc).replace(
         tzinfo=None
     )
-    row = Row(
-        table_name=table_name,
-        name_dataBase=database,
-        row_count=int(row_count),
-        execution_date=execution_time.date(),
-        execution_time=execution_time,
+    row = pa.table(
+        {
+            "table_name": [table_name],
+            "name_dataBase": [database],
+            "row_count": [int(row_count)],
+            "execution_time": [execution_time],
+        },
+        schema=_FILE_SCHEMA,
     )
-    (
-        spark.createDataFrame([row], schema=HISTORY_SCHEMA)
-        .write.mode("append")
-        .partitionBy("execution_date")
-        .parquet(history_path(lake_dir))
+    part_dir = os.path.join(
+        history_path(lake_dir), f"execution_date={execution_time.date().isoformat()}"
     )
+    os.makedirs(part_dir, exist_ok=True)
+    name = f"part-{uuid.uuid4()}.parquet"
+    tmp = os.path.join(part_dir, f".{name}.tmp")
+    pq.write_table(row, tmp)
+    os.replace(tmp, os.path.join(part_dir, name))  # atomic: no torn row file
+
+
+def _has_data_file(path: str) -> bool:
+    """Any file Spark's listing would read (names starting ``.``/``_`` are
+    hidden) under ``path``."""
+    for _, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+        if any(not f.startswith((".", "_")) for f in files):
+            return True
+    return False
 
 
 def latest_runs(
@@ -84,9 +125,12 @@ def latest_runs(
     """(table_name, last_exec): MAX(execution_time) per table over the last N
     days — the reference's BQ query (``verifica_carga_slmandicprd.py:74-82``)
     as a partition-pruned DataFrame aggregation."""
+    path = history_path(lake_dir)
+    if not _has_data_file(path):  # no run yet: every table is never_loaded
+        return spark.createDataFrame([], "table_name string, last_exec timestamp")
     cutoff = F.current_timestamp() - F.expr(f"INTERVAL {int(lookback_days)} DAYS")
     return (
-        spark.read.parquet(history_path(lake_dir))
+        spark.read.parquet(path)
         .where(F.col("execution_date") >= F.to_date(cutoff))
         .groupBy("table_name")
         .agg(F.max("execution_time").alias("last_exec"))

@@ -56,7 +56,7 @@ def ingest_table(
     observed, obs = hist.observed_count(source_df)
     lake.write_table(observed, lake_dir, database, table, mode="overwrite")
     row_count = int(obs.get["row_count"])
-    hist.append_run(spark, lake_dir, table, database, row_count)
+    hist.append_run(lake_dir, table, database, row_count)
     return IngestResult(table, row_count, time.time() - t0)
 
 
@@ -113,21 +113,7 @@ def run_pipeline(
 
     ``catalog``: (table_name, update_time) freshness. ``sources``: table_name
     -> source DataFrame (parquet lake or JDBC — same interface)."""
-    try:
-        history_df = hist.latest_runs(spark, lake_dir, lookback_days)
-    except Exception:  # no history yet: everything is never_loaded
-        from pyspark.sql import types as T
-
-        history_df = spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("table_name", T.StringType()),
-                    T.StructField("last_exec", T.TimestampType()),
-                ]
-            ),
-        )
-
+    history_df = hist.latest_runs(spark, lake_dir, lookback_days)
     changed = [r["table_name"] for r in detect_changes(catalog, history_df).collect()]
     manifest_path = os.path.join(lake_dir, "meta", "pending_tables.json")
     write_manifest(manifest_path, changed)

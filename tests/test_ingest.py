@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import os
 
 import duckdb
 import pytest
@@ -268,6 +269,134 @@ class TestPipeline:
         observed, obs = observed_count(df)
         lake.write_table(observed, str(tmp_path), "db", "region")
         assert obs.get["row_count"] == 5
+
+
+class TestHistory:
+    """``history.append_run`` writes from the driver (one atomic row file, no
+    Spark job); ``latest_runs`` reads both its files and Spark-written ones."""
+
+    def test_concurrent_appends_keep_every_row(self, spark, tmp_path):
+        """The ``_temporary`` race: concurrent Spark appends to one directory
+        deleted each other's staging dir. 8 threads x 5 rows must read back
+        as exactly 40 rows, with no temp file left or read."""
+        import sys
+        from concurrent.futures import ThreadPoolExecutor
+
+        from feature_datalake_sl_mandic_spark.ingest import history as hist
+
+        lake_dir = str(tmp_path / "lake")
+
+        def appends(i):
+            for j in range(5):
+                hist.append_run(lake_dir, f"t{i}", "db", j)
+
+        switch = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            with ThreadPoolExecutor(max_workers=8) as pool:
+                for f in [pool.submit(appends, i) for i in range(8)]:
+                    f.result(timeout=120)
+        finally:
+            sys.setswitchinterval(switch)
+
+        df = spark.read.parquet(hist.history_path(lake_dir))
+        counts = {r["table_name"]: r["count"] for r in df.groupBy("table_name").count().collect()}
+        assert counts == {f"t{i}": 5 for i in range(8)}
+        read = [f.rsplit("/", 1)[-1] for f in df.inputFiles()]
+        assert len(read) == 40 and all(f.startswith("part-") for f in read)
+        on_disk = [f for _, _, fs in os.walk(hist.history_path(lake_dir)) for f in fs]
+        assert sorted(on_disk) == sorted(read)
+
+    def test_pipeline_one_row_per_table_past_worker_count(self, spark, tmp_path):
+        from feature_datalake_sl_mandic_spark.ingest import history as hist
+        from feature_datalake_sl_mandic_spark.ingest.pipeline import run_pipeline
+
+        tables = ["customer", "lineitem", "nation", "orders", "part", "region", "supplier"]
+        lake_dir = str(tmp_path / "lake")
+        now = dt.datetime.now()
+        sources = {t: spark.read.parquet(f"/root/testdata/sf0.001/{t}.parquet") for t in tables}
+        catalog = spark.createDataFrame([(t, now) for t in tables], CATALOG_SCHEMA)
+
+        results = run_pipeline(spark, catalog, sources, lake_dir, "testdb", max_workers=3)
+        assert sorted(r.table for r in results if r.status == "ok") == tables
+        rows = spark.read.parquet(hist.history_path(lake_dir)).groupBy("table_name").count()
+        assert {r["table_name"]: r["count"] for r in rows.collect()} == {t: 1 for t in tables}
+
+    def test_append_run_runs_no_spark_job(self, spark, tmp_path):
+        from feature_datalake_sl_mandic_spark.ingest import history as hist
+
+        sc = spark.sparkContext
+        group = f"history-append-{tmp_path.name}"
+        sc.setJobGroup(group, "history append")
+        try:
+            hist.append_run(str(tmp_path), "t", "db", 1)
+            assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+            spark.range(1).collect()  # control: the group does tag jobs
+            assert list(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    def test_reads_back_with_spark_written_rows(self, spark, tmp_path):
+        """A history holding a row from the former Spark writer and rows from
+        ``append_run`` reads back as HISTORY_SCHEMA types, keeps microsecond
+        ``execution_time``s, and still partition-prunes."""
+        from feature_datalake_sl_mandic_spark import plans
+        from feature_datalake_sl_mandic_spark.ingest import history as hist
+
+        lake_dir = str(tmp_path / "lake")
+        path = hist.history_path(lake_dir)
+        day = dt.datetime.now().replace(microsecond=0) - dt.timedelta(days=1)
+        t_spark = day + dt.timedelta(microseconds=123457)
+        t_a = day + dt.timedelta(hours=1, microseconds=654321)
+        t_b = day - dt.timedelta(days=2, microseconds=1)
+        (
+            spark.createDataFrame(
+                [("a", "db", 3, t_spark.date(), t_spark)], hist.HISTORY_SCHEMA
+            )
+            .write.mode("append")
+            .partitionBy("execution_date")
+            .parquet(path)
+        )
+        hist.append_run(lake_dir, "a", "db", 4, t_a)
+        hist.append_run(lake_dir, "b", "db", 5, t_b)
+
+        back = spark.read.parquet(path)
+        assert {f.name: f.dataType for f in back.schema} == {
+            f.name: f.dataType for f in hist.HISTORY_SCHEMA
+        }
+        got = {(r["table_name"], r["row_count"], r["execution_time"]) for r in back.collect()}
+        assert got == {("a", 3, t_spark), ("a", 4, t_a), ("b", 5, t_b)}
+
+        latest = hist.latest_runs(spark, lake_dir)
+        assert {r["table_name"]: r["last_exec"] for r in latest.collect()} == {
+            "a": t_a,
+            "b": t_b,
+        }
+        plan = plans.formatted_plan(latest)
+        assert "PartitionFilters: [" in plan and "execution_date" in plan.split(
+            "PartitionFilters: [", 1
+        )[1].split("]", 1)[0]
+
+    def test_no_history_is_empty_and_corrupt_history_fails(self, spark, tmp_path):
+        """A missing history means 'never loaded'; an unreadable one raises
+        instead of silently re-ingesting every table."""
+        from feature_datalake_sl_mandic_spark.ingest import history as hist
+        from feature_datalake_sl_mandic_spark.ingest.pipeline import run_pipeline
+
+        lake_dir = str(tmp_path / "lake")
+        empty = hist.latest_runs(spark, lake_dir)
+        assert empty.columns == ["table_name", "last_exec"] and empty.collect() == []
+
+        part = tmp_path / "lake" / "meta" / "historico_execucao" / "execution_date=2024-01-15"
+        part.mkdir(parents=True)
+        (part / ".part-x.parquet.tmp").write_bytes(b"torn")  # hidden: still empty
+        assert hist.latest_runs(spark, lake_dir).collect() == []
+
+        (part / "part-x.parquet").write_bytes(b"not parquet")
+        catalog = spark.createDataFrame([("nation", dt.datetime.now())], CATALOG_SCHEMA)
+        sources = {"nation": spark.read.parquet("/root/testdata/sf0.001/nation.parquet")}
+        with pytest.raises(Exception, match="(?i)parquet"):
+            run_pipeline(spark, catalog, sources, lake_dir, "testdb")
 
 
 class TestJdbcConfig:
