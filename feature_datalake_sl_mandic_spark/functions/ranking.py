@@ -1,32 +1,35 @@
-"""Distributed top-k with exact global ranks — no global Window.
+"""Top-k selection: one ``row_number`` filter that Catalyst bounds itself.
 
-``row_number() OVER (ORDER BY ...)`` with no PARTITION BY moves the entire
-input through ONE task (Spark warns "No Partition Defined for Window
-operation"), which serializes at 100 TB no matter how small the final
-output is. Every top-k site in this repo routes through here instead:
+``row_number() OVER (...) <= k`` is the only ranked top-k idiom in the
+package (``grouped_topk``). Spark's ``InferWindowGroupLimit`` rule plans it
+as a local per-partition top-k followed by a bounded merge (the REPOSE
+shape, PAPERS.md), so the window never sorts a whole group or the whole
+input in one task:
 
-- ``orderBy(...).limit(k)`` plans as ``TakeOrderedAndProject``: each input
-  partition keeps a local k-heap and the driver merges k-sized heaps —
-  fully parallel scan, O(k) driver memory, no single-task shuffle.
-- When the rank ordinal must appear in the OUTPUT, the k survivors
-  (bounded by construction, k <= a few hundred at every call site) are
-  ranked by a broadcast nested-loop self-count: rank(a) = 1 + |{b : b
-  sorts strictly before a}|. k^2 comparisons on k rows is trivial and the
-  plan contains no Window at all, so the rewrite is scale-safe AND keeps
-  plan audits warning-free.
+- With groups, the plan is ``WindowGroupLimit Partial`` (per-partition
+  top-k per group) -> ``Exchange`` on the groups -> ``WindowGroupLimit
+  Final`` -> ``Window``. A group's window input is at most
+  partitions * k rows, however large or hot the group is.
+- With ``groups=[]`` (a global top-k with its rank ordinal), the plan is
+  ``TakeOrderedAndProject`` under the un-partitioned ``Window``: each input
+  partition keeps a k-heap and the window ranks only the k merged rows.
 
-The sort spec must be a total order (include a unique tie-break column)
-for ranks to be deterministic — the same requirement ``row_number`` has
-for reproducible results.
+The rewrite applies while k <= ``spark.sql.optimizer.
+windowGroupLimitThreshold`` (default 1000); every call site uses k <= 50.
+Above the threshold the limit disappears from the plan and the probe in
+``plans/probe.py`` flags the bare low-cardinality window again.
 
-Equivalence to the single-window ``row_number`` formulation is pinned by
-property tests in ``tests/test_ranking_properties.py``.
+``topk`` (``orderBy().limit()`` -> ``TakeOrderedAndProject``) stays for
+the unranked global case. The sort spec must be a total order (include a
+unique tie-break column) for results to be deterministic, as ``row_number``
+requires.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 # (column name, "asc" | "desc") — lexicographic, first spec most significant.
 OrderSpec = list[tuple[str, str]]
@@ -39,50 +42,9 @@ def _sort_cols(order: OrderSpec) -> list[Column]:
     ]
 
 
-def _strictly_before(order: OrderSpec, left: str, right: str) -> Column:
-    """Predicate: row aliased ``left`` sorts strictly before row ``right``
-    under the lexicographic ``order``."""
-    pred = F.lit(False)
-    # Build right-to-left: ties on every earlier key fall through to the
-    # comparison of the next key.
-    for name, direction in reversed(order):
-        lcol = F.col(f"{left}.{name}")
-        rcol = F.col(f"{right}.{name}")
-        this_key = lcol > rcol if direction == "desc" else lcol < rcol
-        pred = this_key | (lcol.eqNullSafe(rcol) & pred)
-    return pred
-
-
 def topk(df: DataFrame, order: OrderSpec, k: int) -> DataFrame:
     """Top-k rows of ``df`` under ``order`` via TakeOrdered (no Window)."""
     return df.orderBy(*_sort_cols(order)).limit(k)
-
-
-def topk_with_rank(
-    df: DataFrame, order: OrderSpec, k: int, rank_col: str = "rnk"
-) -> DataFrame:
-    """Top-k rows plus their exact global rank ordinal (1-based BIGINT).
-
-    Result columns: ``df``'s columns + ``rank_col``, sorted by rank. The
-    ``order`` must be a total order over ``df``'s rows (unique tie-break),
-    exactly as ``row_number`` would require for determinism, and the first
-    order column must be non-null (it is the count probe in the rank
-    self-join).
-    """
-    out_cols = df.columns
-    # localCheckpoint: the k-row result feeds BOTH sides of the rank
-    # self-join below; materializing it once keeps the (possibly huge)
-    # upstream scan from running twice. Bounded at k rows.
-    top = topk(df, order, k).localCheckpoint()
-    a = top.alias("a")
-    b = top.alias("b")
-    rnk = (F.count(F.col(f"b.{order[0][0]}")) + 1).cast("bigint")
-    return (
-        a.join(F.broadcast(b), _strictly_before(order, "b", "a"), "left_outer")
-        .groupBy(*[F.col(f"a.{c}") for c in out_cols])
-        .agg(rnk.alias(rank_col))
-        .orderBy(rank_col)
-    )
 
 
 def grouped_topk(
@@ -90,40 +52,18 @@ def grouped_topk(
     groups: list[str],
     order: OrderSpec,
     k: int,
-    salt_col: str,
     rank_col: str | None = None,
 ) -> DataFrame:
-    """Exact top-k PER GROUP without a fact-scale window on the bare group
-    key. ``row_number() OVER (PARTITION BY <low-cardinality key>)`` funnels
-    the whole input through |groups| tasks' sorts — the scale-killer class
-    the banded curation caps were cured of. Here rows band by the top 8
-    bits of md5(``salt_col``) (any deterministic high-cardinality column);
-    a first window takes the local top-k per (group, band) fully in
-    parallel — a group's global top-k rows are necessarily inside some
-    band's local top-k, so no candidate is lost — and only the <=256*k
-    survivors per group enter the final group-partitioned rank, whose
-    partitions are bounded regardless of input size.
+    """The top-k rows per group of ``groups`` under ``order`` (the global
+    top-k when ``groups`` is empty).
 
-    ``order`` must be a total order (unique tie-break), exactly as
-    ``row_number`` requires for determinism. With ``rank_col`` the 1-based
-    BIGINT ordinal is kept in the output; otherwise only the top-k rows
-    survive, unranked.
+    With ``rank_col`` the 1-based BIGINT ordinal is kept in the output;
+    otherwise only the top-k rows survive, unranked. Output order is
+    unspecified: callers that need rank order sort at the call site.
     """
-    from pyspark.sql.window import Window
-
-    from feature_datalake_sl_mandic_spark.functions.hashing import md5_int60_col
-
-    band = F.shiftright(md5_int60_col(F.col(salt_col).cast("string")), 52)
-    w_local = Window.partitionBy(*groups, "__band").orderBy(*_sort_cols(order))
-    cand = (
-        df.withColumn("__band", band)
-        .withColumn("__lrn", F.row_number().over(w_local))
-        .where(F.col("__lrn") <= k)
-        .drop("__band", "__lrn")
+    w = Window.partitionBy(*groups).orderBy(*_sort_cols(order))
+    out = rank_col or "__rn"
+    ranked = df.withColumn(out, F.row_number().over(w).cast("bigint")).where(
+        F.col(out) <= k
     )
-    w_final = Window.partitionBy(*groups).orderBy(*_sort_cols(order))
-    out_rank = rank_col or "__rn"
-    ranked = cand.withColumn(
-        out_rank, F.row_number().over(w_final).cast("bigint")
-    ).where(F.col(out_rank) <= k)
-    return ranked if rank_col else ranked.drop("__rn")
+    return ranked if rank_col else ranked.drop(out)

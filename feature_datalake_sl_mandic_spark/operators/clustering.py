@@ -184,9 +184,10 @@ def kmeans_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-balanced subsample: cap each k-means cluster at 10 vectors
     chosen by stable md5 order — diversity-preserving corpus downsampling
     (the per-cluster cap pattern of SemDeDup-style curation). Selection is
-    a banded two-phase ``grouped_topk``: a window partitioned on the bare
-    64-value cluster id would funnel the whole corpus through 64 tasks'
-    sorts at 100x; the band stage keeps it fully parallel."""
+    ``grouped_topk`` per cluster: its per-partition ``WindowGroupLimit``
+    keeps the top 10 of each cluster before the shuffle, so the final
+    window on the 64-value cluster id sees partitions * 10 rows per
+    cluster, not the corpus."""
     from feature_datalake_sl_mandic_spark.functions.ranking import grouped_topk
 
     a = _final_assignments(spark, sf_dir).withColumn(
@@ -198,7 +199,6 @@ def kmeans_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["cluster_final"],
             [("_h", "asc"), ("vec_id", "asc")],
             SAMPLE_PER_CLUSTER,
-            salt_col="vec_id",
             rank_col="sample_rank",
         )
         .select(

@@ -11,14 +11,16 @@ Scale design notes (100 TB):
 - ``dedup_prefix_fingerprint``: shuffles a 16-byte md5 of an 8-token prefix,
   never the document body; one hash-partitioned exchange, same shape as
   ``corpus_clean_pipeline``'s exact dedup.
-- ``corpus_domain_caps`` / ``split_exact_stratified`` / the cap stage of
-  ``corpus_curation_end_to_end``: banded two-level hash rank
-  (``_cap_by_hash_banded``) — NO window ever partitions on the raw
-  low-cardinality ``source``/``lang`` key; only the cap- or
-  threshold-crossing md5-band(s) rank rows, so a mega-domain or mega-stratum
-  spreads across 256 bands instead of serializing through one task. Cap
-  selection is by deterministic content hash, so re-runs are stable (no
-  RNG).
+- ``corpus_domain_caps`` / the cap stage of ``corpus_curation_end_to_end``:
+  ``functions.ranking.grouped_topk`` over (md5(id), id) per ``source``.
+  Catalyst plans the ``row_number <= cap`` filter as a per-partition
+  ``WindowGroupLimit`` before the shuffle, so a mega-domain reaches the
+  final window as at most partitions * cap rows instead of serializing
+  through one task. Cap selection is by deterministic content hash, so
+  re-runs are stable (no RNG).
+- ``split_exact_stratified``: banded two-level hash rank — the split labels
+  every row, so no limit bounds it; only the threshold-crossing md5-band(s)
+  per ``lang`` rank rows, in a window keyed (lang, band).
 - ``quality_unigram_entropy``: per-document entropy via nested higher-order
   functions only — zero shuffle until the final bounded (lang, source)
   rollup; the O(unique·tokens) inner loop stays inside whole-stage codegen.
@@ -38,7 +40,7 @@ from feature_datalake_sl_mandic_spark.functions.hashing import (
     md5_int60_col,
     md5_int60_sql,
 )
-from feature_datalake_sl_mandic_spark.functions.ranking import topk_with_rank
+from feature_datalake_sl_mandic_spark.functions.ranking import grouped_topk
 from feature_datalake_sl_mandic_spark.operators.relational import _t
 from feature_datalake_sl_mandic_spark.operators.text import (
     _STOP_SQL,
@@ -108,90 +110,6 @@ def dedup_prefix_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Banded two-level hash rank (the ``agg_weighted_median_price`` /
-# ``customers_pareto_abc`` prefix-sum playbook, applied to curation's
-# cap/split selections — round-5 verdict asks #2-3).
-#
-# A rank over ``Window.partitionBy(key).orderBy(md5(id), id)`` funnels every
-# row of a partition through ONE task's sort; with a 5-value ``lang`` key or
-# a mega-domain ``source`` that is the whole corpus. The md5 ordering makes
-# the fix cheap: band rows by the LEADING md5 BYTE (256 bands — hex prefix
-# substrings sort exactly like the full hash, so concatenating per-band
-# orders by ascending band IS the global order). Per-(key, band) counts form
-# a bounded relation (|keys| x 256); a prefix sum over it locates each
-# band's global rank offset, so every band except the >=1 threshold-crossing
-# "boundary" band(s) per key takes its label/keep decision WHOLESALE from
-# the band stats — only boundary-band rows (~1/256 of a partition) ever
-# enter a row_number, and that window partitions on (key, band), never on
-# the raw low-cardinality key.
-
-_N_HASH_BANDS = 256  # leading md5 byte; fixed so both branches agree
-
-
-def _with_hash_band(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Add ``h`` = md5(id) and ``band`` = its leading byte (2 hex chars).
-    Sorting by (band, h, id) is identical to sorting by (h, id)."""
-    h = F.md5(F.col(id_col).cast("string"))
-    return df.withColumn("h", h).withColumn("band", F.substring("h", 1, 2))
-
-
-def _cap_by_hash_banded(df: DataFrame, part_col: str, cap: int,
-                        id_col: str = "doc_id"):
-    """Keep at most ``cap`` rows per ``part_col`` under the deterministic
-    (md5(id), id) order — semantically identical to
-    ``row_number() OVER (PARTITION BY part_col ORDER BY md5(id), id) <= cap``
-    but with no full-partition sort. Returns ``(base, kept)`` where ``base``
-    is the localCheckpointed input (+``h``/``band``) so callers can derive
-    totals from the same materialization, and ``kept`` is the capped subset
-    with the helper columns dropped.
-
-    Scale shape: one map-side-combinable (key, band) count; a <=|keys|x256
-    stats relation computes offsets and is broadcast back; bands wholly
-    under the cap keep all rows with zero ordering work; only the single
-    cap-crossing band per key ranks its rows (window on (key, band)).
-
-    The checkpoint is lazy (eager=False): it materializes inside the first
-    consuming job (the stats count) instead of paying a separate job, and
-    the three downstream reads (stats, whole-band branch, boundary branch)
-    hit the cached blocks."""
-    base = _with_hash_band(df, id_col).localCheckpoint(eager=False)
-    stats = base.groupBy(part_col, "band").agg(F.count("*").alias("cnt"))
-    w_off = (
-        Window.partitionBy(part_col)
-        .orderBy("band")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    lab = (
-        stats.withColumn(
-            "off", F.coalesce(F.sum("cnt").over(w_off), F.lit(0)).cast("bigint")
-        )
-        .withColumn(
-            "status",
-            F.when(F.col("off") + F.col("cnt") <= cap, F.lit("all"))
-            .when(F.col("off") >= cap, F.lit("none"))
-            .otherwise(F.lit("boundary")),
-        )
-        # NOT checkpointed: both branches re-derive this bounded relation
-        # from base's cached blocks — measured cheaper than the blocking
-        # job barrier a checkpoint of it adds (round-6 A/B: 1.8s vs 2.5s)
-    )
-    joined = base.join(
-        F.broadcast(lab.select(part_col, "band", "off", "status")),
-        [part_col, "band"],
-    )
-    whole = joined.where(F.col("status") == "all")
-    w_in = Window.partitionBy(part_col, "band").orderBy("h", id_col)
-    bnd_kept = (
-        joined.where(F.col("status") == "boundary")
-        .withColumn("_rn", F.row_number().over(w_in))
-        .where(F.col("off") + F.col("_rn") <= cap)
-        .drop("_rn")
-    )
-    kept = whole.unionByName(bnd_kept).drop("h", "band", "off", "status")
-    return base, kept
-
-
 @register(
     "corpus_domain_caps",
     oracle=f"""
@@ -218,17 +136,21 @@ def corpus_domain_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
     DOMAIN_CAP docs per source, chosen by deterministic content-hash order so
     the selection is a stable pseudo-random sample, not head-of-file bias.
 
-    Scale shape (banded two-level rank, round-6 rewrite): no full-partition
-    sort on ``source`` anywhere — a mega-domain (the common case in web
-    corpora; that's why the cap exists) no longer serializes through one
-    task. See ``_cap_by_hash_banded``: only the single cap-crossing md5-band
-    per source ranks rows; the oracle states the global-window semantics and
-    hash equality proves the decomposition."""
+    Scale shape: the kept rows come from ``grouped_topk`` per source, whose
+    ``row_number <= DOMAIN_CAP`` filter Catalyst bounds with a
+    per-partition ``WindowGroupLimit`` before the shuffle — a mega-domain
+    (the common case in web corpora; that's why the cap exists) reaches
+    the final window as at most partitions * DOMAIN_CAP rows. Per-source
+    totals are a plain map-side-combined count of the same input."""
     (dc,) = _t(spark, sf_dir, "documents")
-    base, kept = _cap_by_hash_banded(
-        dc.select("doc_id", "source", "n_chars"), "source", DOMAIN_CAP
+    docs = dc.select("doc_id", "source", "n_chars")
+    totals = docs.groupBy("source").agg(F.count("*").alias("n_docs"))
+    kept = grouped_topk(
+        docs.withColumn("h", F.md5(F.col("doc_id").cast("string"))),
+        ["source"],
+        [("h", "asc"), ("doc_id", "asc")],
+        DOMAIN_CAP,
     )
-    totals = base.groupBy("source").agg(F.count("*").alias("n_docs"))
     kept_agg = kept.groupBy("source").agg(
         F.count("*").alias("n_kept"),
         F.sum("n_chars").cast("bigint").alias("kept_chars"),
@@ -522,13 +444,14 @@ def corpus_curation_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("lang_pred") == F.col("lang"))
         )
     )
-    # Cap stage: banded two-level rank (see _cap_by_hash_banded) — the
-    # localCheckpoint inside the helper also materializes the gated feature
-    # rows once, so the two branches (whole bands / boundary band) don't
-    # recompute the tokenize-heavy gating.
-    _, capped = _cap_by_hash_banded(
-        gated.select("doc_id", "lang", "source", "n_tokens", "quality"),
-        "source",
+    # Cap stage: per-source top-DOMAIN_CAP by content hash (see
+    # corpus_domain_caps); only the five columns the rollup needs are ranked.
+    capped = grouped_topk(
+        gated.select("doc_id", "lang", "source", "n_tokens", "quality").withColumn(
+            "h", F.md5(F.col("doc_id").cast("string"))
+        ),
+        ["source"],
+        [("h", "asc"), ("doc_id", "asc")],
         DOMAIN_CAP,
     )
     return (
@@ -589,16 +512,25 @@ def split_exact_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale (banded two-level split, round-6 rewrite): the naive plan ranks
     the WHOLE corpus through a window partitioned on 5-value ``lang`` — at
     100x every row funnels through <=5 tasks' sorts. Here rows are banded by
-    the leading md5 byte (prefix order == full-hash order, see
-    ``_with_hash_band``); per-(lang, band) counts plus a prefix sum over
-    that bounded (<=5x256-row) relation locate each band's global rank range,
-    so every band that lies wholly inside test/val/train takes its label
+    the leading md5 byte (prefix order == full-hash order); per-(lang, band)
+    counts plus a prefix sum over that bounded (<=5x256-row) relation
+    locate each band's global rank range, so every band that lies wholly
+    inside test/val/train takes its label
     WHOLESALE from band arithmetic, and only the <=2 boundary bands per lang
     rank their rows — in a window partitioned on (lang, band), never on raw
     ``lang``. The oracle states the global-window semantics; hash equality
     proves the decomposition (the ``agg_weighted_median_price`` playbook)."""
     (dc,) = _t(spark, sf_dir, "documents")
-    base = _with_hash_band(dc.select("doc_id", "lang")).localCheckpoint(eager=False)
+    # h = md5(doc_id) hex, band = its leading byte: hex prefixes sort like
+    # the full hash, so sorting by (band, h, doc_id) equals sorting by
+    # (h, doc_id) and concatenating bands in order IS the global order.
+    h = F.md5(F.col("doc_id").cast("string"))
+    base = (
+        dc.select("doc_id", "lang")
+        .withColumn("h", h)
+        .withColumn("band", F.substring("h", 1, 2))
+        .localCheckpoint(eager=False)
+    )
     stats = base.groupBy("lang", "band").agg(F.count("*").alias("cnt"))
     w_off = (
         Window.partitionBy("lang")
@@ -884,11 +816,17 @@ def corpus_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("llr") / F.count(F.lit(1)), 6).alias("avg_llr"),
         )
     )
-    return topk_with_rank(
-        scored.select("doc_id", "lang", "n_tokens", "avg_llr"),
-        [("avg_llr", "desc"), ("doc_id", "asc")],
-        DSIR_TOP,
-    ).select("doc_id", "lang", "n_tokens", "avg_llr", "rnk")
+    return (
+        grouped_topk(
+            scored.select("doc_id", "lang", "n_tokens", "avg_llr"),
+            [],
+            [("avg_llr", "desc"), ("doc_id", "asc")],
+            DSIR_TOP,
+            rank_col="rnk",
+        )
+        .select("doc_id", "lang", "n_tokens", "avg_llr", "rnk")
+        .orderBy("rnk")
+    )
 
 
 TEMP_ALPHA = 0.3  # mT5/XLM-R temperature exponent
@@ -948,7 +886,7 @@ def corpus_temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     so its only observable here — the KEPT COUNT — collapses to
     least(n_target, n_docs): the plan carries no window over documents at
     all (round-6 sweep of low-cardinality windows). Materializing the actual
-    kept rows would use ``_cap_by_hash_banded`` with cap = n_target, same as
+    kept rows would use ``grouped_topk`` with k = n_target, same as
     ``corpus_domain_caps``."""
     (dc,) = _t(spark, sf_dir, "documents")
     # |langs|-row relation feeds tot/shares/wsum subtrees — pin it so the

@@ -421,9 +421,9 @@ def graph_link_prediction_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale shape: adjacency is the symmetric explode of the capped edge list
     (bounded here; at full scale the per-node neighbor cap IS the wedge
     blowup guard, same argument as the shingle DF cap); wedge counting is
-    one equi-join on the shared neighbor + a groupBy. Ranking is bounded
-    rank over the scored candidates via ``topk_with_rank`` — no global
-    Window."""
+    one equi-join on the shared neighbor + a groupBy. Ranking is
+    ``grouped_topk`` with no groups: TakeOrdered keeps 25 candidates and
+    only those enter the rank window."""
     e = _edges(spark, sf_dir)
     adj = e.select(F.col("u").alias("node"), F.col("v").alias("nbr")).unionAll(
         e.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
@@ -447,11 +447,19 @@ def graph_link_prediction_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame
             "x", "y", "common", "deg_x", "deg_y", F.round(jac, 6).alias("jaccard")
         )
     )
-    from feature_datalake_sl_mandic_spark.functions.ranking import topk_with_rank
+    from feature_datalake_sl_mandic_spark.functions.ranking import grouped_topk
 
-    return topk_with_rank(
-        scored, [("jaccard", "desc"), ("x", "asc"), ("y", "asc")], LINKPRED_TOP
-    ).select("x", "y", "common", "deg_x", "deg_y", "jaccard", "rnk")
+    return (
+        grouped_topk(
+            scored,
+            [],
+            [("jaccard", "desc"), ("x", "asc"), ("y", "asc")],
+            LINKPRED_TOP,
+            rank_col="rnk",
+        )
+        .select("x", "y", "common", "deg_x", "deg_y", "jaccard", "rnk")
+        .orderBy("rnk")
+    )
 
 
 # -------------------------- connected components: two-phase star algorithm

@@ -285,11 +285,11 @@ def join_lateral_topn_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     row, so at scale this is one shuffle on the correlation key (equivalent
     to the window-rank formulation, but stated as the ANSI lateral the
     reference's warehouse users would write). This query exists to cover
-    the LATERAL operator surface itself; because the decorrelated rank
-    window partitions on the 25-value correlation key, the per-group top-k
-    SCALE path is ``functions.ranking.grouped_topk`` (banded local top-k,
-    then a bounded final rank) — the form every production top-k selection
-    in this repo uses (plans/probe.py ALLOW-lists this demo explicitly)."""
+    the LATERAL operator surface itself. Catalyst decorrelates it into a
+    rank filter on the 25-value correlation key and bounds that with a
+    per-partition ``WindowGroupLimit`` — the same plan
+    ``join_lateral_topn_grouped`` states through
+    ``functions.ranking.grouped_topk``."""
     for t in ("nation", "customer"):
         _t(spark, sf_dir, t)[0].createOrReplaceTempView(t)
     return spark.sql(
@@ -316,18 +316,17 @@ def join_lateral_topn_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
              ORDER BY c_acctbal DESC, c_name LIMIT {LATERAL_TOP_N}) c
     ORDER BY nation, acctbal DESC, customer
     """,
-    tags=("join", "lateral-join", "top-k-per-group", "banded"),
+    tags=("join", "lateral-join", "top-k-per-group"),
 )
 def join_lateral_topn_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale-safe twin of ``join_lateral_topn_customers`` under the SAME
+    """DataFrame twin of ``join_lateral_topn_customers`` under the SAME
     oracle: the per-nation top-2 selection runs through
-    ``functions.ranking.grouped_topk`` (banded local top-k per (group,
-    band), then a final rank over the bounded <=256*k survivors) instead
-    of the rank window Catalyst decorrelates the LATERAL into. Same
-    result, but no fact-scale sort funnels through |nations| tasks — this
-    is the formulation to point at a fact table at 100 TB, and its
-    existence is why the LATERAL demo's bare ``c_nationkey`` window stays
-    an accepted exception in plans/probe.py rather than a debt."""
+    ``functions.ranking.grouped_topk`` (a ``row_number <= 2`` filter that
+    Catalyst plans as a per-partition ``WindowGroupLimit``, then a final
+    rank over at most partitions * k rows per nation), so no fact-scale
+    sort funnels through |nations| tasks — the formulation every
+    production top-k selection in this repo uses. Catalyst bounds the
+    decorrelated LATERAL with the same limit."""
     from feature_datalake_sl_mandic_spark.functions.ranking import grouped_topk
 
     cust, nat = (_t(spark, sf_dir, t)[0] for t in ("customer", "nation"))
@@ -336,7 +335,6 @@ def join_lateral_topn_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
         groups=["c_nationkey"],
         order=[("c_acctbal", "desc"), ("c_name", "asc")],
         k=LATERAL_TOP_N,
-        salt_col="c_name",
     )
     return (
         top.join(F.broadcast(nat), top.c_nationkey == nat.n_nationkey)

@@ -31,7 +31,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from feature_datalake_sl_mandic_spark.functions.ranking import topk_with_rank
+from feature_datalake_sl_mandic_spark.functions.ranking import grouped_topk
 from feature_datalake_sl_mandic_spark.operators.relational import _t
 from feature_datalake_sl_mandic_spark.operators.similarity import (
     _DUCK_PAIR_COS,
@@ -105,8 +105,9 @@ def text_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``rrf(d) = Σ 1/(60 + rank)`` over the lists that retrieved d; a document
     found by only one ranker contributes only that term (full-outer join,
     missing list → 0). Both input lists carry exact global ranks from
-    ``topk_with_rank`` (TakeOrdered + bounded self-count — no global Window),
-    and fusing 100 bounded rows is driver-trivial at any corpus size."""
+    ``grouped_topk`` with no groups (TakeOrdered under the rank window, so
+    the window sees k rows), and fusing 100 bounded rows is driver-trivial
+    at any corpus size."""
     bm = text_bm25_search(spark, sf_dir).select(
         "doc_id", F.col("rnk").alias("bm25_rank")
     )
@@ -128,8 +129,12 @@ def text_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     dense_scored = c.crossJoin(F.broadcast(q)).select(
         "doc_id", F.round(cos, 6).alias("cosine")
     )
-    dn = topk_with_rank(
-        dense_scored, [("cosine", "desc"), ("doc_id", "asc")], RRF_LIST_K
+    dn = grouped_topk(
+        dense_scored,
+        [],
+        [("cosine", "desc"), ("doc_id", "asc")],
+        RRF_LIST_K,
+        rank_col="rnk",
     ).select("doc_id", F.col("rnk").alias("dense_rank"))
 
     rrf = F.round(
@@ -140,9 +145,17 @@ def text_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     fused = bm.join(dn, "doc_id", "full_outer").select(
         "doc_id", "bm25_rank", "dense_rank", rrf.alias("rrf_score")
     )
-    return topk_with_rank(
-        fused, [("rrf_score", "desc"), ("doc_id", "asc")], RRF_TOP
-    ).select("doc_id", "bm25_rank", "dense_rank", "rrf_score", "rnk")
+    return (
+        grouped_topk(
+            fused,
+            [],
+            [("rrf_score", "desc"), ("doc_id", "asc")],
+            RRF_TOP,
+            rank_col="rnk",
+        )
+        .select("doc_id", "bm25_rank", "dense_rank", "rrf_score", "rnk")
+        .orderBy("rnk")
+    )
 
 
 # Ideal DCG for k binary-relevant results — identical literal on both sides.

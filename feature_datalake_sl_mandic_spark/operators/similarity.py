@@ -1595,9 +1595,9 @@ def embedding_outliers_mahalanobis(spark: SparkSession, sf_dir: str) -> DataFram
     Scale shape: one explode-aggregate for the 64 per-dim stats (map-side
     combined), stats broadcast back as two arrays, distance as
     zip_with+aggregate inside codegen, and the global top-k routes through
-    ``topk_with_rank`` (TakeOrdered + bounded rank join — no global
-    Window)."""
-    from feature_datalake_sl_mandic_spark.functions.ranking import topk_with_rank
+    ``grouped_topk`` with no groups (TakeOrdered under the rank window —
+    the window sees k rows)."""
+    from feature_datalake_sl_mandic_spark.functions.ranking import grouped_topk
 
     (em,) = _t(spark, sf_dir, "embeddings")
     # non-finite vectors are excluded, not scored: one NaN row would poison
@@ -1647,6 +1647,6 @@ def embedding_outliers_mahalanobis(spark: SparkSession, sf_dir: str) -> DataFram
     scored = e.crossJoin(F.broadcast(mus)).select(
         "vec_id", F.col("label").cast("bigint").alias("label"), d2.alias("d2")
     )
-    return topk_with_rank(
-        scored, [("d2", "desc"), ("vec_id", "asc")], MAHA_TOP
+    return grouped_topk(
+        scored, [], [("d2", "desc"), ("vec_id", "asc")], MAHA_TOP, rank_col="rnk"
     ).orderBy("rnk")

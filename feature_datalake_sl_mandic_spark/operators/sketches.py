@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from feature_datalake_sl_mandic_spark.functions.hashing import md5_int60_col, md5_int60_sql
-from feature_datalake_sl_mandic_spark.functions.ranking import topk_with_rank
+from feature_datalake_sl_mandic_spark.functions.ranking import grouped_topk
 from feature_datalake_sl_mandic_spark.operators.relational import _t
 from feature_datalake_sl_mandic_spark.registry import register
 
@@ -109,8 +109,12 @@ def cms_heavy_hitters_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cells = hashes.groupBy("j", "b").agg(F.count(F.lit(1)).alias("n"))
     exact = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("exact_count"))
-    candidates = topk_with_rank(
-        exact, [("exact_count", "desc"), ("user_id", "asc")], CMS_TOP
+    candidates = grouped_topk(
+        exact,
+        [],
+        [("exact_count", "desc"), ("user_id", "asc")],
+        CMS_TOP,
+        rank_col="rnk",
     )
     probes = candidates.crossJoin(F.broadcast(js)).select(
         "user_id",
@@ -446,19 +450,15 @@ def sketch_kmv_set_algebra_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["event_type", "hv"])
         .localCheckpoint()
     )
-    # k smallest hashes per type via banded two-phase grouped_topk: a window
-    # partitioned on bare low-cardinality event_type would funnel every
-    # distinct user hash through |types| tasks' sorts at 100x. The sketch
+    # k smallest hashes per type via grouped_topk: the per-partition
+    # WindowGroupLimit keeps every distinct user hash from funnelling
+    # through |types| tasks' sorts in the window on event_type. The sketch
     # (|types| x k rows) feeds the pair grid AND the pair combine;
     # checkpoint so each branch reads kilobytes instead of re-running the
     # selection (this plan was the repo's heaviest at 38 shuffles before;
     # array-fold rank below cut it again to ~16).
-    from feature_datalake_sl_mandic_spark.functions.ranking import grouped_topk
-
     sk = (
-        grouped_topk(
-            hvs, ["event_type"], [("hv", "asc")], KMV_K, salt_col="hv"
-        )
+        grouped_topk(hvs, ["event_type"], [("hv", "asc")], KMV_K)
         .select("event_type", "hv")
         .localCheckpoint()
     )

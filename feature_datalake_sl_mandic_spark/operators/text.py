@@ -22,7 +22,7 @@ from feature_datalake_sl_mandic_spark.functions.hashing import (
     md5_bucket_col,
     md5_bucket_sql,
 )
-from feature_datalake_sl_mandic_spark.functions.ranking import topk_with_rank
+from feature_datalake_sl_mandic_spark.functions.ranking import grouped_topk
 from feature_datalake_sl_mandic_spark.operators.relational import _t
 from feature_datalake_sl_mandic_spark.registry import register
 
@@ -1284,18 +1284,15 @@ def lm_bigram_next_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     uni = pairs.groupBy("w1").agg(F.sum("pair_cnt").alias("w1_cnt"))
     top_w1 = uni.orderBy(F.col("w1_cnt").desc(), "w1").limit(BIGRAM_TOP_W1)
-    # successor rank via banded two-phase grouped_topk: a frequent w1's
-    # successor list is vocabulary-sized at web scale, so a window
-    # partitioned on bare w1 sorts it in one task per head word
-    from feature_datalake_sl_mandic_spark.functions.ranking import grouped_topk
-
+    # successor rank via grouped_topk: a frequent w1's successor list is
+    # vocabulary-sized at web scale, and the per-partition WindowGroupLimit
+    # keeps the window on bare w1 from sorting it in one task per head word
     return (
         grouped_topk(
             pairs.join(F.broadcast(top_w1), "w1"),
             ["w1"],
             [("pair_cnt", "desc"), ("w2", "asc")],
             BIGRAM_TOP_NEXT,
-            salt_col="w2",
             rank_col="rnk",
         )
         .select(
@@ -1505,13 +1502,15 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_matched_terms"),
         )
     )
-    return topk_with_rank(
+    return grouped_topk(
         scored.select(
             "doc_id", F.round("score", 6).alias("bm25"), "n_matched_terms"
         ),
+        [],
         [("bm25", "desc"), ("doc_id", "asc")],
         BM25_TOP,
-    )
+        rank_col="rnk",
+    ).orderBy("rnk")
 
 
 # ------------------------------------------- exact-k weighted reservoir sample
@@ -1552,15 +1551,12 @@ def sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     draws need. Keys are rounded to 12 decimals before ranking so the
     ordering never hinges on a last-ulp ln() difference between engines.
 
-    Scale: one narrow projection computes the key inside the scan, then a
-    banded two-phase ``grouped_topk``: a single window partitioned on bare
-    5-value lang would funnel every document row through |langs| tasks'
-    sorts at 100x — the same scale-killer class the banded curation caps
-    were cured of. Only the <=256*k band-local survivors per lang enter
-    the final rank window, which is bounded regardless of corpus size.
-    The shuffle carries only (lang, key, doc_id, w), not the text."""
+    Scale: one narrow projection computes the key inside the scan, then
+    ``grouped_topk`` per lang: its per-partition ``WindowGroupLimit`` keeps
+    the top k of each lang before the shuffle, so only partitions * k rows
+    per lang enter the final rank window, bounded regardless of corpus
+    size. The shuffle carries only (lang, key, doc_id, w), not the text."""
     from feature_datalake_sl_mandic_spark.functions.hashing import md5_int60_col
-    from feature_datalake_sl_mandic_spark.functions.ranking import grouped_topk
 
     (dc,) = _t(spark, sf_dir, "documents")
     h = md5_int60_col(F.col("doc_id").cast("string"))
@@ -1576,7 +1572,6 @@ def sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["lang"],
             [("es_key", "desc"), ("doc_id", "asc")],
             RESERVOIR_K,
-            salt_col="doc_id",
             rank_col="rank",
         )
         .select("lang", "rank", "doc_id", "n_tokens")
@@ -1731,14 +1726,12 @@ def corpus_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     LM-scoring plans document.
 
     Scale shape: token counts collapse map-side; the top-50 head terms per
-    lang come from a banded two-phase ``grouped_topk`` (the per-lang
-    vocabulary is Heaps-sublinear but still ~10^7-10^8 terms at web scale —
-    a window partitioned on bare 5-value lang would sort it in |langs|
-    tasks) and only those rows enter the regression, which both engines
-    compute with the same closed-form sufficient statistics
+    lang come from ``grouped_topk`` (the per-lang vocabulary is
+    Heaps-sublinear but still ~10^7-10^8 terms at web scale; the
+    per-partition ``WindowGroupLimit`` keeps the final window on lang at
+    partitions * 50 rows) and only those rows enter the regression, which
+    both engines compute with the same closed-form sufficient statistics
     (regr_slope/intercept/r2)."""
-    from feature_datalake_sl_mandic_spark.functions.ranking import grouped_topk
-
     (dc,) = _t(spark, sf_dir, "documents")
     tc = (
         dc.select("lang", F.explode(F.split(F.lower("text"), " ")).alias("tok"))
@@ -1751,7 +1744,6 @@ def corpus_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["lang"],
             [("freq", "desc"), ("tok", "asc")],
             ZIPF_TOP,
-            salt_col="tok",
             rank_col="rnk",
         )
         .select(
@@ -2150,11 +2142,8 @@ def lm_bigram_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
         * (F.col("n1p_bw") / F.col("n_types")),
         6,
     )
-    # successor rank via banded two-phase grouped_topk (see
-    # lm_bigram_next_tokens: per-head-word successor lists are
-    # vocabulary-sized at web scale)
-    from feature_datalake_sl_mandic_spark.functions.ranking import grouped_topk
-
+    # successor rank via grouped_topk (see lm_bigram_next_tokens:
+    # per-head-word successor lists are vocabulary-sized at web scale)
     scored = (
         pairs.join(F.broadcast(top_w1), "w1")
         .join(F.broadcast(cont), "w2")
@@ -2173,7 +2162,6 @@ def lm_bigram_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["w1"],
         [("p_kn", "desc"), ("w2", "asc")],
         KN_TOP_NEXT,
-        salt_col="w2",
         rank_col="rnk",
     ).orderBy("w1", "rnk")
 

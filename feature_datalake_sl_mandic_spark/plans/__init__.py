@@ -51,3 +51,41 @@ def has_whole_stage_codegen(df: DataFrame) -> bool:
     )
     # codegen'd operators render as "*(n) NodeName" in the final plan
     return re.search(r"\*\(\d+\)", plan) is not None
+
+
+def physical_operators(df: DataFrame) -> list[tuple[object, object | None]]:
+    """(operator, parent) pairs over the physical plan as first planned —
+    the plan inside AdaptiveSparkPlan before any stage runs, exchanges
+    included. Both are JVM ``SparkPlan`` handles (``nodeName()``, ...)."""
+    root = df._jdf.queryExecution().executedPlan()  # noqa: SLF001
+    if root.nodeName() == "AdaptiveSparkPlan":
+        root = root.executedPlan()
+    out, stack = [], [(root, None)]
+    while stack:
+        node, parent = stack.pop()
+        out.append((node, parent))
+        kids = node.children()
+        stack.extend((kids.apply(i), node) for i in range(kids.size()))
+    return out
+
+
+def window_group_limits(df: DataFrame) -> list[tuple[str, str]]:
+    """(mode, parent operator) of every ``WindowGroupLimit``: a bounded
+    ``row_number <= k`` top-k plans as ("Partial", "Exchange") below the
+    shuffle and ("Final", "Window") above it."""
+    return [
+        (node.mode().toString(), parent.nodeName())
+        for node, parent in physical_operators(df)
+        if node.nodeName() == "WindowGroupLimit"
+    ]
+
+
+def unpartitioned_window_children(df: DataFrame) -> list[str]:
+    """Child operator of every ``Window`` with no PARTITION BY. Such a
+    window runs in one task; ``TakeOrderedAndProject`` as its child means
+    that task ranks only the k rows a global top-k kept."""
+    return [
+        node.child().nodeName()
+        for node, _ in physical_operators(df)
+        if node.nodeName() == "Window" and node.partitionSpec().isEmpty()
+    ]

@@ -9,13 +9,17 @@ mechanical: it compiles the formatted plan of all registered queries at
 sf0.001 (plan shape is scale-invariant) and flags
 
 - ``window partitionBy=[...]`` whose partition keys are ALL low-cardinality
-  column names (lang, source, event_type, ...). Legitimate instances exist —
-  a window over a BOUNDED relation (per-band counts, daily aggregates,
-  banded top-k survivors) keyed on the stratum is exactly what the banded
-  two-level designs produce — so every legitimate flag is enumerated in
-  ``ALLOW`` below with its boundedness argument. A flag with no matching
-  ALLOW entry (or an extra occurrence: counts must match exactly) is
-  UNEXPLAINED and the sweep fails.
+  column names (lang, source, event_type, ...). A window whose child is
+  ``WindowGroupLimit ... Final`` is not flagged: that is Catalyst's plan
+  for a ``row_number <= k`` top-k (``functions.ranking.grouped_topk``),
+  and the limit's Partial twin below the exchange bounds the window input
+  at partitions * k rows per group. Other legitimate instances exist — a
+  window over a BOUNDED relation (per-band counts, daily aggregates) keyed
+  on the stratum is exactly what the banded two-level designs produce — so
+  every legitimate flag is enumerated in ``ALLOW`` below with its
+  boundedness argument. A flag with no matching ALLOW entry (or an extra
+  occurrence: counts must match exactly) is UNEXPLAINED and the sweep
+  fails.
 - repeated parquet scans of the same table (>= 2 for fact tables, >= 3 for
   dims). Role-based repeats with disjoint pushed filters or single-column
   pruned reads are cheaper at scale than pinning the full relation (the
@@ -97,14 +101,16 @@ R_DAILY = (
     "calendar-bounded daily aggregate: the window input is one row per "
     "(event_type, day), bounded by the calendar not the fact table"
 )
-R_TOPK = (
-    "grouped_topk final rank: the window input is the banded local top-k "
-    "survivors, <= n_bands * k rows per group (functions/ranking.py)"
-)
 R_ROLE = (
     "role-based repeat scan with disjoint pushed filters / pruned columns; "
     "pinning the full relation is write amplification (measured slower — "
     "ARCHITECTURE.md negative results)"
+)
+R_BM25 = (
+    "BM25 roles: the query-term tf aggregate and its df rollup (which "
+    "re-reads the tf pass on the build side of the idf broadcast), the "
+    "doc-length projection joined to the matches, and the one-row corpus "
+    "stats; every read prunes to doc_id/text"
 )
 R_EMB = (
     "embedding roles: bounded codebook/training sample vs corpus vs query "
@@ -139,11 +145,6 @@ R_SKEW_SUMMARY = (
     "SUMMARIES — volume reduced from raw events by the mean session size; "
     "the raw-event pass is keyed (user_id, chunk). Measured flat on the "
     "40%-hot-key lake (skew_probe.py)"
-)
-R_SKEW_UNIQUE_DOC = (
-    "window keyed on doc_id, which is row-unique in documents: the "
-    "partition is ONE document's term/chunk fan-out, bounded by single-"
-    "document length, so no hot key can form"
 )
 R_SKEW_VERSIONS = (
     "window over the SCD2 dimension's per-key version chain — volume per "
@@ -195,9 +196,6 @@ ALLOW: dict[str, dict[str, tuple[int, str]]] = {
         "skew window partitionBy=['c_custkey']": (1, R_SKEW_VERSIONS),
         "broadcast of orders": (1, R_BC_STATS),
     },
-    "text_tfidf_top_terms": {
-        "skew window partitionBy=['doc_id']": (1, R_SKEW_UNIQUE_DOC)
-    },
     "window_first_last_nth_order": {
         "skew window partitionBy=['o_custkey']": (1, R_SKEW_SEQ)
     },
@@ -213,21 +211,14 @@ ALLOW: dict[str, dict[str, tuple[int, str]]] = {
     # --- windows over bounded relations keyed on the stratum ------------
     "sample_stratified_neyman": {"window partitionBy=['event_type']": (2, R_BAND)},
     "split_exact_stratified": {"window partitionBy=['lang']": (2, R_BAND)},
-    "corpus_domain_caps": {"window partitionBy=['source']": (2, R_BAND)},
-    "corpus_curation_end_to_end": {"window partitionBy=['source']": (2, R_BAND)},
     "agg_weighted_median_price": {
         "window partitionBy=['l_returnflag']": (
-            2,
-            "banded two-level design: both windows run over the rows of the "
-            "ONE median-crossing price band per group (~1/55 of the group, "
-            "located by the bounded 3x<=61 band-total relation), never the "
-            "raw fact partition",
+            1,
+            "banded two-level design: the cumulative-weight window runs over "
+            "the rows of the ONE median-crossing price band per group (~1/55 "
+            "of the group, located by the bounded 3x<=61 band-total "
+            "relation), never the raw fact partition",
         )
-    },
-    "sample_weighted_reservoir": {"window partitionBy=['lang']": (1, R_TOPK)},
-    "corpus_zipf_fit": {"window partitionBy=['lang']": (1, R_TOPK)},
-    "kmeans_balanced_sample": {
-        "window partitionBy=['cluster_final']": (1, R_TOPK)
     },
     "sketch_ddsketch_order_quantiles": {
         "scan x2 of orders": (1, R_CUTOFF),
@@ -237,19 +228,6 @@ ALLOW: dict[str, dict[str, tuple[int, str]]] = {
             "bucket relation — bounded by the sketch's bucket count "
             "regardless of input size",
         ),
-    },
-    "join_lateral_topn_customers": {
-        "window partitionBy=['c_nationkey']": (
-            1,
-            "deliberate ANSI LATERAL surface demo: Catalyst decorrelates the "
-            "LIMIT'd subquery into a rank window on the correlation key; the "
-            "registered scale-safe twin under the SAME oracle is "
-            "join_lateral_topn_grouped (functions.ranking.grouped_topk) — "
-            "this query exists to cover the lateral operator itself",
-        )
-    },
-    "join_lateral_topn_grouped": {
-        "window partitionBy=['c_nationkey']": (1, R_TOPK)
     },
     "stats_gini_order_values": {
         "window partitionBy=['seg']": (
@@ -265,7 +243,6 @@ ALLOW: dict[str, dict[str, tuple[int, str]]] = {
             "totals, O(n_docs / bucket_width) rows ~= task count",
         )
     },
-    "ts_trend_pair_sampled": {"window partitionBy=['event_type']": (1, R_DAILY)},
     "events_gapfill_resample": {
         "window partitionBy=['event_type']": (1, R_DAILY + " (calendar spine)")
     },
@@ -339,6 +316,36 @@ ALLOW: dict[str, dict[str, tuple[int, str]]] = {
         "scan x2 of orders": (1, R_ROLE + " (base vs delta slices)")
     },
     "quality_decile_stats": {"scan x2 of documents": (1, R_CUTOFF)},
+    "corpus_domain_caps": {
+        "scan x2 of documents": (1, R_CUTOFF + " (per-source totals)")
+    },
+    "embedding_outliers_mahalanobis": {
+        "scan x2 of embeddings": (1, R_CUTOFF + " (per-dimension mean/variance)")
+    },
+    "cms_heavy_hitters_events": {
+        "scan x2 of events": (
+            1,
+            R_ROLE + " (sketch-cell pass vs exact-count pass, each reading "
+            "only user_id)",
+        )
+    },
+    "corpus_dsir_importance": {
+        "scan x4 of documents": (
+            1,
+            R_CUTOFF + " (raw and target hashed-feature counts and their "
+            "totals, each <= DSIR_N_FEATURES rows, then the scoring pass)",
+        )
+    },
+    "text_bm25_search": {
+        "scan x4 of documents": (1, R_BM25),
+        "broadcast of documents": (1, R_BC_STATS + " (the doc-length side)"),
+    },
+    "text_hybrid_rrf_search": {
+        "scan x4 of documents": (1, R_BM25),
+        "broadcast of documents": (1, R_BC_STATS + " (the doc-length side)"),
+        "scan x2 of embeddings": (1, R_EMB + " (query vs corpus sides)"),
+        "broadcast of embeddings": (1, R_BC_FIXED),
+    },
     "corpus_boilerplate_tokens": {
         "scan x3 of documents": (
             1,
@@ -439,6 +446,8 @@ _WIN_RE = re.compile(
     re.M,
 )
 _SCAN_RE = re.compile(r"Location: \w+ \[[^\]]*?/(\w+)\.parquet")
+# detail-section header: ``(8) Window`` (id first; tree lines put it last)
+_DETAIL_HDR_RE = re.compile(r"^\((\d+)\) (\S.*?)\s*$")
 
 # --- broadcast build-side audit (round-10 verdict ask #1) ----------------
 # Tree lines render the operator name followed by its id: ``+- Filter (2)``;
@@ -514,6 +523,35 @@ def broadcast_flags(plan: str) -> list[str]:
     return flags
 
 
+def _details(plan: str) -> dict[str, tuple[str, str]]:
+    """Detail sections of a formatted plan: node id -> (name, body)."""
+    out = {}
+    for block in plan.split("\n\n"):
+        head, _, body = block.strip("\n").partition("\n")
+        m = _DETAIL_HDR_RE.match(head)
+        if m:
+            out[m.group(1)] = (m.group(2), body)
+    return out
+
+
+def _group_limited_windows(
+    plan: str, details: dict[str, tuple[str, str]]
+) -> set[str]:
+    """Ids of Window nodes whose tree child is ``WindowGroupLimit ... Final``
+    (a Window is unary, so its child is the next tree line, one level in)."""
+    final = {
+        nid
+        for nid, (name, body) in details.items()
+        if name.startswith("WindowGroupLimit") and body.rstrip().endswith("Final")
+    }
+    nodes = _parse_tree(plan)
+    return {
+        nid
+        for (indent, name, nid), (c_indent, _, cid) in zip(nodes, nodes[1:])
+        if name == "Window" and c_indent > indent and cid in final
+    }
+
+
 def flags_for_plan(plan: str) -> list[str]:
     """All anti-pattern flags found in one formatted plan (with repeats)."""
     flags: list[str] = []
@@ -521,12 +559,17 @@ def flags_for_plan(plan: str) -> list[str]:
     for t, c in sorted(scans.items()):
         if c >= 3 or (c >= 2 and t in FACT):
             flags.append(f"scan x{c} of {t}")
-    for m in _WIN_RE.finditer(plan):
-        keys = [k.strip().split("#")[0] for k in m.group(1).split(",") if k.strip()]
-        if keys and all(k in LOWCARD for k in keys):
-            flags.append(f"window partitionBy={keys}")
-        if keys and all(k in SKEWABLE for k in keys):
-            flags.append(f"skew window partitionBy={keys}")
+    details = _details(plan)
+    limited = _group_limited_windows(plan, details)
+    for nid, (_, body) in details.items():
+        if nid in limited:
+            continue
+        for m in _WIN_RE.finditer(body):
+            keys = [k.strip().split("#")[0] for k in m.group(1).split(",") if k.strip()]
+            if keys and all(k in LOWCARD for k in keys):
+                flags.append(f"window partitionBy={keys}")
+            if keys and all(k in SKEWABLE for k in keys):
+                flags.append(f"skew window partitionBy={keys}")
     if "CartesianProduct" in plan:
         flags.append("CartesianProduct")
     # Row-at-a-time Python UDFs serialize every row through pickle one at a

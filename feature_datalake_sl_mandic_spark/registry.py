@@ -245,6 +245,24 @@ def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
 # and the 23 alphabetically-first r3 names — all 50 driver-green in
 # CORRECTNESS_r10.json.)
 _PRIORITY: list[str] = [
+    # --- the top-k helper merge: every query whose plan moved from the
+    #     banded / self-joined / pinned top-k helpers to the one
+    #     row_number filter in functions.ranking.grouped_topk
+    "cms_heavy_hitters_events",
+    "corpus_curation_end_to_end",
+    "corpus_domain_caps",
+    "corpus_dsir_importance",
+    "corpus_zipf_fit",
+    "embedding_outliers_mahalanobis",
+    "graph_link_prediction_jaccard",
+    "join_lateral_topn_grouped",
+    "kmeans_balanced_sample",
+    "lm_bigram_kneser_ney",
+    "lm_bigram_next_tokens",
+    "sample_weighted_reservoir",
+    "sketch_kmv_set_algebra_users",
+    "text_bm25_search",
+    "text_hybrid_rrf_search",
     # --- round-11 changed paths (build asks + the optimization round's
     #     plan/value-path rewrites, so the driver window re-greens each)
     "events_click_attribution",  # r11: derived bucket probe count (r10 ask #3)
@@ -260,9 +278,9 @@ _PRIORITY: list[str] = [
     "dedup_embedding_cosine",  # r11 opt: Arrow pair-cosine kernel
     "ann_pq_lloyd_refined",  # r11 opt: unrolled subvector distance
     "graph_components_star",  # r11 opt: lazy intra-round ckpt + 1-job converge
-    # --- the 10 remaining last-green-in-r3 names (r10 verdict ask #5 list)
+    # --- 9 of the 10 remaining last-green-in-r3 names (r10 verdict ask #5
+    #     list; text_bm25_search moved up to the top-k head)
     "stats_mutual_info_lang_source",
-    "text_bm25_search",
     "text_sparse_cosine_pairs",
     "ts_ewma_daily_value",
     "ts_linear_interpolate",
@@ -271,38 +289,29 @@ _PRIORITY: list[str] = [
     "ts_zscore_anomalies",
     "txlog_change_data_feed",
     "validate_quarantine_orders",
-    # --- all 25 last-green-in-r4 names
+    # --- 13 of the 25 last-green-in-r4 names (corpus_dsir_importance and
+    #     graph_link_prediction_jaccard moved up to the top-k head)
     "agg_exact_mode_priority",
     "agg_winsorized_event_values",
     "arrays_setops_adjacent_docs",
     "arrow_batch_embedding_norms",
     "checksum_orders_content",
-    "corpus_dsir_importance",
     "corpus_quality_weighted_sample",
     "embedding_standardize_dims",
     "events_hopping_3h_1h",
-    "graph_link_prediction_jaccard",
     "join_asof_nearest_view",
     "join_interval_overlap_campaigns",
     "join_lateral_topn_customers",
     "join_null_safe_profiles",
     "kanon_release_customers",
-    "layout_skipping_scorecard",
-    "maps_zipwith_type_rates",
-    "multimodal_video_frame_sample",
-    "multimodal_wav_decode",
-    "privacy_dp_noisy_counts",
-    "pyds_training_shards_roundtrip",
-    "sketch_ddsketch_order_quantiles",
-    "text_bpe_pair_stats",
-    "udaf_median_session_value",
-    "variant_props_events",
-    # --- the 2 alphabetically-first of the 31 last-green-in-r5 names
-    #     (the remaining 29 lead the round-12 fill; the optimization
-    #     round's 10 changed-path heads displaced this section's tail —
-    #     graph_components_star moved up to the changed-path head)
-    "agg_weighted_median_price",
-    "corpus_js_divergence_sources",
+    # (the top-k head displaced the rest of the r4 names —
+    # layout_skipping_scorecard, maps_zipwith_type_rates,
+    # multimodal_video_frame_sample, multimodal_wav_decode,
+    # privacy_dp_noisy_counts, pyds_training_shards_roundtrip,
+    # sketch_ddsketch_order_quantiles, text_bpe_pair_stats,
+    # udaf_median_session_value, variant_props_events — and the two r5
+    # names agg_weighted_median_price, corpus_js_divergence_sources; they
+    # lead the next window's fill)
 ]
 # (multimodal_feature_extract was retired from the registry in round 4: its
 # codec stubs made it permanently rows-only and every registered query must
@@ -311,10 +320,7 @@ _PRIORITY: list[str] = [
 
 def load_all() -> dict[str, QuerySpec]:
     for mod in _QUERY_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError:
-            pass  # module not built yet (incremental rounds)
+        importlib.import_module(mod)
     ordered: dict[str, QuerySpec] = {}
     for name in _PRIORITY:
         if name in _REGISTRY:

@@ -37,6 +37,38 @@ Location: InMemoryFileIndex [file:/root/testdata/sf0.001/documents.parquet]
 ReadSchema: struct<doc_id:bigint>
 """
 
+# A ``row_number <= 5`` per-lang top-k as Catalyst plans it.
+WGL_CANNED = """== Physical Plan ==
+AdaptiveSparkPlan (10)
++- Filter (9)
+   +- Window (8)
+      +- WindowGroupLimit (7)
+         +- Sort (6)
+            +- Exchange (5)
+               +- WindowGroupLimit (4)
+                  +- Sort (3)
+                     +- Project (2)
+                        +- Scan parquet  (1)
+
+
+(1) Scan parquet 
+Output [2]: [doc_id#0L, lang#2]
+Location: InMemoryFileIndex [file:/x/documents.parquet]
+ReadSchema: struct<doc_id:bigint,lang:string>
+
+(4) WindowGroupLimit
+Input [2]: [doc_id#0L, lang#2]
+Arguments: [lang#2], [doc_id#0L ASC NULLS FIRST], row_number(), 5, Partial
+
+(7) WindowGroupLimit
+Input [2]: [doc_id#0L, lang#2]
+Arguments: [lang#2], [doc_id#0L ASC NULLS FIRST], row_number(), 5, Final
+
+(8) Window
+Input [2]: [doc_id#0L, lang#2]
+Arguments: [row_number() windowspecdefinition(lang#2, doc_id#0L ASC NULLS FIRST, specifiedwindowframe(RowFrame, unboundedpreceding$(), currentrow$())) AS rn#6], [lang#2], [doc_id#0L ASC NULLS FIRST]
+"""
+
 
 class TestParser:
     def test_canned_plan_flags(self):
@@ -53,6 +85,19 @@ class TestParser:
             "windowspecdefinition(lang#2, band#9L, doc_id#0L ASC",
         ).replace("], [lang#2], [", "], [lang#2, band#9L], [")
         assert not [f for f in probe.flags_for_plan(plan) if "window" in f]
+
+    def test_window_group_limited_window_not_flagged(self):
+        """A Window fed by ``WindowGroupLimit ... Final`` is a bounded top-k
+        (its Partial twin below the Exchange keeps partitions * k rows per
+        group); the same Window without the limit ranks whole groups."""
+        assert probe.flags_for_plan(WGL_CANNED) == []
+        unbounded = WGL_CANNED.replace("      +- WindowGroupLimit (7)\n", "")
+        assert probe.flags_for_plan(unbounded) == ["window partitionBy=['lang']"]
+        # a Partial limit alone does not bound the window above the Exchange
+        partial_only = WGL_CANNED.replace(
+            "row_number(), 5, Final", "row_number(), 5, Partial"
+        )
+        assert probe.flags_for_plan(partial_only) == ["window partitionBy=['lang']"]
 
     def test_cartesian_flagged(self):
         assert "CartesianProduct" in probe.flags_for_plan("CartesianProduct")
@@ -95,6 +140,22 @@ class TestLiveClassification:
 
         spec = registry.load_all()["q1_pricing_summary"]
         assert probe.flags_for_plan(formatted_plan(spec.fn(spark, SF_SMALL))) == []
+
+    def test_live_topk_flags_only_above_group_limit_threshold(self, spark):
+        """grouped_topk's low-cardinality window is exempt while Catalyst
+        bounds it; past ``windowGroupLimitThreshold`` the limit leaves the
+        plan and the flag comes back."""
+        from feature_datalake_sl_mandic_spark.functions.ranking import grouped_topk
+
+        dc = spark.read.parquet(os.path.join(SF_SMALL, "documents.parquet"))
+        limit = int(spark.conf.get("spark.sql.optimizer.windowGroupLimitThreshold"))
+        order = [("doc_id", "asc")]
+        small = grouped_topk(dc, ["lang"], order, 5, rank_col="rn")
+        big = grouped_topk(dc, ["lang"], order, limit + 1, rank_col="rn")
+        assert probe.flags_for_plan(formatted_plan(small)) == []
+        assert probe.flags_for_plan(formatted_plan(big)) == [
+            "window partitionBy=['lang']"
+        ]
 
     def test_live_banded_query_matches_allowlist(self, spark):
         """split_exact_stratified's flags must equal its ALLOW entry exactly

@@ -1,7 +1,8 @@
-"""Property tests for ``functions/ranking.py``: the distributed top-k-with-
-rank rewrite must agree EXACTLY — rows, ranks, tie-breaks — with the
-single-global-Window ``row_number`` formulation it replaced in
-``text_bm25_search``, ``cms_heavy_hitters_events`` and the graph edge list.
+"""Property tests for ``functions/ranking.py``: ``topk`` (TakeOrdered) must
+keep EXACTLY the rows a global ``row_number`` filter keeps, and the global
+``grouped_topk`` must rank through TakeOrdered rather than a full-input
+window. (``grouped_topk`` IS the ``row_number`` filter, so its values need
+no decomposition test; oracle parity checks every call site.)
 
 Randomized inputs deliberately generate heavy ties on the score column so
 the lexicographic tie-break path (not just the primary sort key) is what
@@ -41,24 +42,6 @@ def _window_reference(df, k):
 
 @settings(**PROP_SETTINGS)
 @given(rows=_rows_st, k=st.integers(1, 12))
-def test_topk_with_rank_matches_global_row_number(spark, rows, k):
-    from feature_datalake_sl_mandic_spark.functions.ranking import topk_with_rank
-
-    df = spark.createDataFrame(
-        rows or [(None, None)], "id INT, score INT"
-    ).where(F.col("id").isNotNull())
-    got = {
-        (r.id, r.score, r.rnk)
-        for r in topk_with_rank(
-            df, [("score", "desc"), ("id", "asc")], k
-        ).collect()
-    }
-    want = {(r.id, r.score, r.rnk) for r in _window_reference(df, k).collect()}
-    assert got == want
-
-
-@settings(**PROP_SETTINGS)
-@given(rows=_rows_st, k=st.integers(1, 12))
 def test_topk_matches_global_row_number_rows(spark, rows, k):
     from feature_datalake_sl_mandic_spark.functions.ranking import topk
 
@@ -75,11 +58,15 @@ def test_topk_matches_global_row_number_rows(spark, rows, k):
 
 def test_topk_with_rank_three_key_order_and_plan(spark):
     """Three-column lexicographic order (the graph edge-list shape) ranks
-    identically to row_number, and neither helper's plan contains a Window
-    operator (the point of the rewrite)."""
+    identically to row_number, ``topk`` plans no Window at all, and the
+    global ``grouped_topk``'s rank window sits on the TakeOrderedAndProject
+    that kept its k rows, so no task ranks the full input."""
     from feature_datalake_sl_mandic_spark.functions.ranking import (
+        grouped_topk,
         topk,
-        topk_with_rank,
+    )
+    from feature_datalake_sl_mandic_spark.plans import (
+        unpartitioned_window_children,
     )
 
     rows = [
@@ -99,14 +86,14 @@ def test_topk_with_rank_three_key_order_and_plan(spark):
         .orderBy("rnk")
         .collect()
     ]
-    ranked = topk_with_rank(df, order, 5)
-    got = [(r.u, r.v, r.shared, r.rnk) for r in ranked.collect()]
+    ranked = grouped_topk(df, [], order, 5, rank_col="rnk")
+    got = [(r.u, r.v, r.shared, r.rnk) for r in ranked.orderBy("rnk").collect()]
     assert got == want
 
-    for plan_df in (ranked, topk(df, order, 5)):
-        plan = plan_df._jdf.queryExecution().executedPlan().toString()
-        assert "Window" not in plan
-    assert "TakeOrdered" in topk(df, order, 5)._jdf.queryExecution().executedPlan().toString()
+    assert unpartitioned_window_children(ranked) == ["TakeOrderedAndProject"]
+    plan = topk(df, order, 5)._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan
+    assert "TakeOrdered" in plan
 
 
 class TestBucketSplitRangeFrame:
@@ -186,71 +173,3 @@ class TestBucketSplitRangeFrame:
     @settings(**PROP_SETTINGS)
     def test_matches_global_range_window_at_bucket_boundaries(self, spark, epochs):
         self._check(spark, epochs)
-
-
-# (id, group, score) rows with heavy ties on score; unique ids keep the
-# full sort key a total order. Groups are few (the low-cardinality-key
-# regime grouped_topk exists for).
-_grouped_rows_st = st.lists(
-    st.tuples(st.integers(0, 60), st.integers(0, 3), st.integers(0, 4)),
-    min_size=0,
-    max_size=60,
-    unique_by=lambda t: t[0],
-)
-
-
-@settings(**PROP_SETTINGS)
-@given(rows=_grouped_rows_st, k=st.integers(1, 8))
-def test_grouped_topk_matches_per_group_row_number(spark, rows, k):
-    """The banded two-phase grouped_topk must agree EXACTLY — rows, ranks,
-    tie-breaks — with the single-window per-group row_number it replaces,
-    on any input including empty groups, ties, and k > group size."""
-    from feature_datalake_sl_mandic_spark.functions.ranking import grouped_topk
-
-    df = spark.createDataFrame(
-        rows or [(None, None, None)], "id INT, grp INT, score INT"
-    ).where(F.col("id").isNotNull())
-
-    w = Window.partitionBy("grp").orderBy(F.col("score").desc(), "id")
-    want = {
-        (r["grp"], r["id"], r["rnk"])
-        for r in df.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rnk") <= k)
-        .collect()
-    }
-    got = {
-        (r["grp"], r["id"], r["rnk"])
-        for r in grouped_topk(
-            df,
-            ["grp"],
-            [("score", "desc"), ("id", "asc")],
-            k,
-            salt_col="id",
-            rank_col="rnk",
-        ).collect()
-    }
-    assert got == want
-
-
-@settings(**PROP_SETTINGS)
-@given(rows=_grouped_rows_st, k=st.integers(1, 8))
-def test_grouped_topk_unranked_matches_set(spark, rows, k):
-    from feature_datalake_sl_mandic_spark.functions.ranking import grouped_topk
-
-    df = spark.createDataFrame(
-        rows or [(None, None, None)], "id INT, grp INT, score INT"
-    ).where(F.col("id").isNotNull())
-    w = Window.partitionBy("grp").orderBy(F.col("score").desc(), "id")
-    want = {
-        (r["grp"], r["id"])
-        for r in df.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .collect()
-    }
-    got = {
-        (r["grp"], r["id"])
-        for r in grouped_topk(
-            df, ["grp"], [("score", "desc"), ("id", "asc")], k, salt_col="id"
-        ).collect()
-    }
-    assert got == want
